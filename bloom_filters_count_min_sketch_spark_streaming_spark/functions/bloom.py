@@ -11,10 +11,16 @@ Spark-first design:
   executor-side and only the final (kilobyte-to-megabyte) filter reaches
   the driver. This is exactly the 100 TB-safe shape: data never moves, the
   sketch does. PySpark exposes no Python wrapper, so we bridge via py4j.
-- **probe** — the serialized filter is broadcast and checked row-by-row
-  inside a vectorized pandas UDF using a numpy reimplementation of Spark's
-  Murmur3 (functions/hashing.py). Hashing of non-long columns happens
-  JVM-side first (``xxhash64``), so Python only does bit lookups.
+- **probe** — Catalyst's own ``BloomFilterMightContain`` (the expression
+  behind Spark's runtime join filters), built over py4j with the
+  serialized filter as a BINARY literal. It deserializes the filter with
+  the same ``BloomFilter.readFrom``/``mightContainLong`` the build used,
+  so answers are bit-identical for V1 and V2 filters, and it runs in a
+  whole-stage-codegen ``Project``: no Python worker, no Arrow hop. Cost:
+  the filter is a plan literal, so every plan render carries it (see
+  ``bloom_might_contain``). The numpy mirror
+  ``BloomFilterSketch.might_contain_longs`` (Murmur3 in
+  functions/hashing.py) serves in-process probes and parity tests.
 
 Non-long columns are normalized with ``xxhash64`` before both build and
 probe, keeping the Murmur3 surface long-only (a single, testable codepath).
@@ -26,9 +32,10 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType
+from pyspark.sql.types import BooleanType
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.hashing import (
     as_long_key as _as_long,
@@ -358,9 +365,12 @@ def bloom_build(df: DataFrame, col: str, expected_items: int, fpp: float) -> byt
     jvm = spark._jvm  # noqa: SLF001
     try:
         jbloom = jdf.stat().bloomFilter(col, int(expected_items), float(fpp))
-    except Exception:  # noqa: BLE001 — JVM aggregate NPEs on zero rows
-        # Zero non-null rows: an empty filter (matches nothing) is the
-        # correct degenerate result.
+    except Py4JJavaError as e:
+        # Zero non-null rows: the JVM aggregate NPEs ("buf" is null); an
+        # empty filter (matches nothing) is the correct degenerate result.
+        # Any other failure is the caller's and propagates.
+        if e.java_exception.getClass().getName() != "java.lang.NullPointerException":
+            raise
         jbloom = jvm.org.apache.spark.util.sketch.BloomFilter.create(
             int(expected_items), float(fpp)
         )
@@ -370,23 +380,27 @@ def bloom_build(df: DataFrame, col: str, expected_items: int, fpp: float) -> byt
 
 
 def bloom_might_contain(df: DataFrame, col: str, bloom_bytes: bytes, out: str = "might_contain") -> DataFrame:
-    """Add boolean ``out`` column: approximate membership of ``col``.
+    """Add boolean ``out`` column: approximate membership of ``col``
+    (NULL key -> NULL).
 
-    The filter is shipped to executors via closure capture of the parsed
-    sketch (broadcast by Spark's task serializer); per-row work is numpy.
+    Runs in Catalyst's ``BloomFilterMightContain`` (Spark 4.1 registers no
+    SQL name for it, so it is built over py4j). The filter travels as a
+    plan literal: it is serialized with each task, as a closure capture
+    would be, and it is rendered into every plan string, about 12
+    characters per filter byte. A 1.08 MB filter (200k keys at fpp 1e-9)
+    makes ``queryExecution().toString()`` 12.9 M characters and 0.2-0.4 s
+    to render on 4 CPUs, and adds ~0.15 s to each action. Keep filters in
+    plans at the kilobyte-to-megabyte sizes a closure already shipped.
     """
-    sketch = BloomFilterSketch.from_bytes(bloom_bytes)
-
-    @F.pandas_udf(BooleanType())
-    def _probe(keys: pd.Series) -> pd.Series:
-        mask = keys.isna().to_numpy()
-        values = keys.to_numpy(dtype=np.int64, na_value=0)
-        result = pd.Series(sketch.might_contain_longs(values), dtype="object")
-        # NULL in -> NULL out (same as Spark's might_contain semantics)
-        result[mask] = None
-        return result
-
-    return df.withColumn(out, _probe(_as_long(df, col)))
+    jvm = df.sparkSession._jvm  # noqa: SLF001
+    exprs = jvm.org.apache.spark.sql.catalyst.expressions
+    utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    bloom = exprs.Literal.create(
+        bytearray(bloom_bytes), jvm.org.apache.spark.sql.types.DataTypes.BinaryType
+    )
+    key = utils.expression(_as_long(df, col)._jc)  # noqa: SLF001
+    probe = exprs.BloomFilterMightContain(bloom, key)
+    return df.withColumn(out, Column(utils.column(probe)))
 
 
 def bloom_prefilter_join(
@@ -403,9 +417,9 @@ def bloom_prefilter_join(
 
     The filter is a SUPERSET gate (no false negatives), so the subsequent
     exact join returns exactly the plain join's rows — approximate
-    structure, exact result. At scale this trades a kilobyte broadcast
-    for shuffling only rows that can match; with fpp=0.01 the shuffle
-    carries ≤1% non-matching rows.
+    structure, exact result. At scale this trades a kilobyte filter
+    shipped with each task for shuffling only rows that can match; with
+    fpp=0.01 the shuffle carries ≤1% non-matching rows.
 
     Pass ``expected_items`` (an upper bound on the small side's distinct
     keys) to skip the sizing pass; otherwise a cheap ``count()`` (no

@@ -260,17 +260,7 @@ def cms_build_numpy(
 
 def cms_estimate(df: DataFrame, col: str, cms_bytes: bytes, out: str = "cms_estimate") -> DataFrame:
     """Add a per-row approximate frequency column (batch point query)."""
-    sketch = CountMinSketchTable.from_bytes(cms_bytes)
-
-    @F.pandas_udf(LongType())
-    def _probe(keys: pd.Series) -> pd.Series:
-        mask = keys.isna().to_numpy()
-        values = keys.to_numpy(dtype=np.int64, na_value=0)
-        result = pd.Series(sketch.estimate_longs(values), dtype="object")
-        result[mask] = None  # NULL key -> NULL estimate
-        return result
-
-    return df.withColumn(out, _probe(_as_long(df, col)))
+    return cms_estimate_from_table(df, col, CountMinSketchTable.from_bytes(cms_bytes), out)
 
 
 def cms_estimate_from_table(

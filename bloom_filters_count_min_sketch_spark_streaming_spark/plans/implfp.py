@@ -269,25 +269,6 @@ def _tree_for(commit: str | None) -> TreeReader:
     return TreeReader(commit)
 
 
-def impl_changed_since(plans_file: str, fn_name: str, rnd: int) -> bool:
-    """True iff fn's fingerprint differs between HEAD's working tree and the
-    tree at round ``rnd``'s CORRECTNESS commit. Conservative: unresolvable
-    OLD fingerprints count as changed; a missing round commit (or no git at
-    all) counts as unchanged so the rotation degrades to staleness ranking.
-    """
-    rel = os.path.relpath(os.path.abspath(plans_file), _repo_root())
-    if rel.startswith(".."):
-        return False
-    commit = _round_commit(rnd)
-    if commit is None:
-        return False
-    now = fingerprint(_tree_for(None), rel, fn_name)
-    if now is None:
-        return False
-    old = fingerprint(_tree_for(commit), rel, fn_name)
-    return old is None or old != now
-
-
 # Change-recency buckets for rotation ordering. Lower = more urgent.
 CHANGED_THIS_ROUND = 0  # fingerprint differs from the LATEST round commit
 CHANGED_LAST_ROUND = 1  # equal at latest, differs at the round before

@@ -4,6 +4,7 @@ bounded false-positive rate, JVM bit-parity of the numpy probe."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.bloom import (
@@ -12,6 +13,7 @@ from bloom_filters_count_min_sketch_spark_streaming_spark.functions.bloom import
     bloom_might_contain,
 )
 from bloom_filters_count_min_sketch_spark_streaming_spark.functions.hashing import (
+    as_long_key,
     murmur3_hash_long,
 )
 
@@ -206,3 +208,129 @@ def test_counting_bloom_distributed_build_matches_local(spark):
     local.add_longs(np.array([i % 250 for i in range(400)], dtype=np.int64))
     local.delete_longs(np.array([i % 50 for i in range(100)], dtype=np.int64))
     assert np.array_equal(dist.counters, local.counters)
+
+
+# --- DataFrame probe (Catalyst BloomFilterMightContain) vs the numpy witness
+
+
+def _probe_vs_witness(df, col, bloom_bytes):
+    """Run the DataFrame probe; return (keys, probe answers, witness answers)
+    over the non-NULL keys after asserting NULL key <-> NULL answer."""
+    probed = bloom_might_contain(df, col, bloom_bytes).select(
+        as_long_key(df, col).alias("h"), "might_contain"
+    )
+    assert probed.where(F.col("h").isNull() != F.col("might_contain").isNull()).count() == 0
+    # NULLs dropped Spark-side: a nullable column would reach pandas as
+    # float64 and round the 64-bit string hashes
+    live = probed.where(F.col("h").isNotNull()).toPandas()
+    keys = live["h"].to_numpy(np.int64)
+    witness = BloomFilterSketch.from_bytes(bloom_bytes).might_contain_longs(keys)
+    return keys, live["might_contain"].to_numpy(bool), witness
+
+
+def _random_sketch(version, seed, n_words=256, k=5):
+    rng = np.random.default_rng(version)
+    # two OR-ed draws: ~75% fill, so a k=5 probe answers True about a
+    # quarter of the time
+    words = rng.integers(0, 2**64, (2, n_words), dtype=np.uint64)
+    return BloomFilterSketch(version=version, num_hash_functions=k, seed=seed, words=words[0] | words[1])
+
+
+def test_bloom_probe_parity_v2_build(spark):
+    df = spark.range(0, 4000).withColumnRenamed("id", "k")
+    bb = bloom_build(df, "k", expected_items=4000, fpp=0.03)
+    assert BloomFilterSketch.from_bytes(bb).version == 2
+    probe = spark.range(-3000, 9000, 7).withColumnRenamed("id", "k")
+    keys, got, want = _probe_vs_witness(probe, "k", bb)
+    assert np.array_equal(got, want)
+    assert got[(keys >= 0) & (keys < 4000)].all()  # no false negatives
+    assert 0 < got.sum() < len(got)
+
+
+def test_bloom_probe_parity_v1_and_seeded_v2_bytes(spark):
+    """Hand-built V1 and seeded V2 layouts: the JVM readFrom dispatches on
+    the version word and must answer exactly as the numpy mirror does."""
+    probe = spark.range(-5000, 5000, 3).withColumnRenamed("id", "k")
+    for sketch in (_random_sketch(1, 0), _random_sketch(2, 12345)):
+        _, got, want = _probe_vs_witness(probe, "k", sketch.to_bytes())
+        assert np.array_equal(got, want), f"version {sketch.version}"
+        assert 0 < got.sum() < len(got)
+
+
+def test_bloom_probe_parity_python_merged_union(spark):
+    """The bloom_union_membership path: Python OR-merge, to_bytes, probe."""
+    kw = dict(expected_items=10_000, fpp=0.01)
+    a = bloom_build(spark.range(0, 3000).withColumnRenamed("id", "k"), "k", **kw)
+    b = bloom_build(spark.range(2500, 6000).withColumnRenamed("id", "k"), "k", **kw)
+    merged = BloomFilterSketch.from_bytes(a).union(BloomFilterSketch.from_bytes(b)).to_bytes()
+    keys, got, want = _probe_vs_witness(
+        spark.range(-2000, 12_000).withColumnRenamed("id", "k"), "k", merged
+    )
+    assert np.array_equal(got, want)
+    assert got[(keys >= 0) & (keys < 6000)].all()
+
+
+def test_bloom_probe_parity_int_bigint_string_with_nulls(spark):
+    rows = [(i, i * 7919, f"key-{i}") for i in range(0, 600)] + [(None, None, None)] * 5
+    df = spark.createDataFrame(rows, "i int, l bigint, s string")
+    probe_rows = [(i, i * 7919, f"key-{i}") for i in range(300, 1200)] + [(None, None, None)] * 5
+    probe = spark.createDataFrame(probe_rows, "i int, l bigint, s string")
+    for col in ("i", "l", "s"):
+        bb = bloom_build(df, col, expected_items=600, fpp=0.02)
+        _, got, want = _probe_vs_witness(probe, col, bb)
+        assert np.array_equal(got, want), col
+        assert got[:300].all(), col  # probe rows 300..599 were inserted
+        nulls = bloom_might_contain(probe, col, bb).where(F.col(col).isNull())
+        assert [r["might_contain"] for r in nulls.collect()] == [None] * 5, col
+
+
+def test_bloom_stream_probe_runs_in_jvm(spark, sf_dir, monkeypatch):
+    """A streaming probe, run the way stream_bloom_prefilter_join runs it,
+    answers as the witness does and plans no Python evaluation node."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
+        events_stream_source,
+        run_available_now,
+    )
+
+    started = []
+    start = DataStreamWriter.start
+
+    def _capture(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", _capture)
+    bb = bloom_build(
+        spark.range(0, 400).withColumnRenamed("id", "user_id"), "user_id", 400, 0.01
+    )
+    src = events_stream_source(spark, sf_dir)
+    out = run_available_now(
+        bloom_might_contain(src, "user_id", bb).select("user_id", "might_contain"), "append"
+    ).toPandas()
+    assert len(out) > 0
+    users = out["user_id"].to_numpy(np.int64)
+    want = BloomFilterSketch.from_bytes(bb).might_contain_longs(users)
+    assert np.array_equal(out["might_contain"].to_numpy(bool), want)
+    plan = started[0]._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "might_contain(" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_bloom_build_zero_rows_is_empty_filter(spark):
+    nulls = spark.createDataFrame([(None,)] * 4, "k bigint")
+    bb = bloom_build(nulls, "k", expected_items=100, fpp=0.01)
+    assert not BloomFilterSketch.from_bytes(bb).words.any()
+    probe = spark.range(0, 500).withColumnRenamed("id", "k")
+    assert bloom_might_contain(probe, "k", bb).where(F.col("might_contain")).count() == 0
+
+
+def test_bloom_build_failures_propagate(spark):
+    df = spark.range(0, 10).withColumnRenamed("id", "k")
+    with pytest.raises(Exception):
+        bloom_build(df, "missing", expected_items=10, fpp=0.01)
+    # a failure inside the JVM aggregate job is not mistaken for "zero rows"
+    boom = spark.range(0, 10).withColumn("k", F.raise_error(F.lit("boom")).cast("long"))
+    with pytest.raises(Exception, match="boom"):
+        bloom_build(boom, "k", expected_items=10, fpp=0.01)
