@@ -15,6 +15,9 @@ of every package-internal function/class/constant it references,
 transitively (static AST resolution of `mod.fn(...)` attribute calls through
 package imports and of bare names through module-level defs). Old trees are
 read with `git show <round-commit>:<path>` — no historical code is executed.
+``changed_defs`` names WHICH closure defs changed, so the rotation can take
+turns between distinct changes instead of letting one shared helper's edit
+(the same set for all its dependents) fill the window.
 
 Conservative on ambiguity: if the query function cannot be resolved in the
 OLD tree (file or def missing) the query counts as changed; if git itself is
@@ -206,37 +209,46 @@ class TreeReader:
         return self._indexes[rel]
 
 
+def _closure(
+    tree: TreeReader, plans_rel: str, fn_name: str
+) -> dict[tuple[str, str], str] | None:
+    """(module_rel, def_name) -> source of fn and its transitive
+    package-internal referenced defs, or None when the ROOT function itself
+    cannot be resolved. Unresolvable transitive references map to a
+    placeholder (it shifts the hash only if their NAME changes)."""
+    root_idx = tree.index(plans_rel)
+    if root_idx is None or fn_name not in root_idx.defs:
+        return None
+    items: dict[tuple[str, str], str] = {}
+    stack: list[tuple[str, str]] = [(plans_rel, fn_name)]
+    while stack:
+        rel, name = stack.pop()
+        if (rel, name) in items:
+            continue
+        idx = tree.index(rel)
+        if idx is None:
+            items[(rel, name)] = "<missing-module>"
+            continue
+        src = idx.source_of(name)
+        if src is None:
+            items[(rel, name)] = "<unresolved>"
+            continue
+        items[(rel, name)] = src
+        stack.extend(idx.refs_of(name))
+    return items
+
+
 def fingerprint(tree: TreeReader, plans_rel: str, fn_name: str) -> str | None:
     """Content hash of fn + its transitive package-internal referenced defs.
 
     Returns None when the ROOT function itself cannot be resolved (caller
-    decides how to treat that); unresolvable transitive references are
-    hashed as placeholders (they shift the hash only if their NAME changes).
+    decides how to treat that).
     """
-    root_idx = tree.index(plans_rel)
-    if root_idx is None or fn_name not in root_idx.defs:
+    items = _closure(tree, plans_rel, fn_name)
+    if items is None:
         return None
-    seen: set[tuple[str, str]] = set()
-    items: list[tuple[str, str, str]] = []
-    stack: list[tuple[str, str]] = [(plans_rel, fn_name)]
-    while stack:
-        rel, name = stack.pop()
-        if (rel, name) in seen:
-            continue
-        seen.add((rel, name))
-        idx = tree.index(rel)
-        if idx is None:
-            items.append((rel, name, "<missing-module>"))
-            continue
-        src = idx.source_of(name)
-        if src is None:
-            items.append((rel, name, "<unresolved>"))
-            continue
-        items.append((rel, name, src))
-        stack.extend(idx.refs_of(name))
-    items.sort()
     h = hashlib.sha256()
-    for rel, name, src in items:
+    for (rel, name), src in sorted(items.items()):
         h.update(rel.encode())
         h.update(b"\x00")
         h.update(name.encode())
@@ -285,27 +297,32 @@ def rotation_change_info(
     changed-last-round sorts before older drift. ``touched`` is the core
     rule: the implementation changed since the round that last driver-
     checked this query (False for never-checked queries, which are already
-    top-ranked by the rotation). Degrades safely: without git (or round
-    commits) everything reads (CHANGED_OLDER, False) and the rotation falls
-    back to pure staleness ordering.
+    top-ranked by the rotation). Degrades safely: when the latest round's
+    commit is unresolvable every bucket reads CHANGED_OLDER and ``touched``
+    compares against each query's own last-checked round commit; without
+    git (or any round commit) everything reads (CHANGED_OLDER, False) and
+    the rotation falls back to pure staleness ordering.
     """
     rounds = sorted({r for r in checked.values()}, reverse=True)
     latest = _round_commit(rounds[0]) if rounds else None
     prev = _round_commit(rounds[1]) if len(rounds) > 1 else None
     out: dict[str, tuple[int, bool]] = {}
     for name, fn in query_fns.items():
-        code = getattr(fn, "__code__", None)
-        fname = getattr(fn, "__name__", None)
-        if code is None or fname is None:
+        loc = _locate(fn)
+        if loc is None:
             out[name] = (CHANGED_OLDER, False)
             continue
-        rel = os.path.relpath(os.path.abspath(code.co_filename), _repo_root())
-        if rel.startswith(".."):
-            out[name] = (CHANGED_OLDER, False)
-            continue
+        rel, fname = loc
         now = fingerprint(_tree_for(None), rel, fname)
-        if now is None or latest is None:
+        if now is None:
             out[name] = (CHANGED_OLDER, False)
+            continue
+        last = checked.get(name)
+        if latest is None:
+            # The newest round's record is not committed yet: no bucket,
+            # but "touched since its own last check" still resolves.
+            touched = last is not None and bool(changed_defs(fn, last))
+            out[name] = (CHANGED_OLDER, touched)
             continue
         at_latest = fingerprint(_tree_for(latest), rel, fname)
         if at_latest != now:
@@ -315,16 +332,42 @@ def rotation_change_info(
         else:
             bucket = CHANGED_OLDER
         touched = False
-        last = checked.get(name)
         if last is not None:
             if last == rounds[0]:
                 touched = bucket == CHANGED_THIS_ROUND
             elif len(rounds) > 1 and last == rounds[1]:
                 touched = bucket in (CHANGED_THIS_ROUND, CHANGED_LAST_ROUND)
             else:
-                commit = _round_commit(last)
-                if commit is not None:
-                    old = fingerprint(_tree_for(commit), rel, fname)
-                    touched = old is None or old != now
+                touched = bool(changed_defs(fn, last))
         out[name] = (bucket, touched)
     return out
+
+
+def _locate(fn: object) -> tuple[str, str] | None:
+    """(repo-relative file, def name) of a query function inside the repo."""
+    code = getattr(fn, "__code__", None)
+    fname = getattr(fn, "__name__", None)
+    if code is None or fname is None:
+        return None
+    rel = os.path.relpath(os.path.abspath(code.co_filename), _repo_root())
+    if rel.startswith(".."):
+        return None
+    return rel, fname
+
+
+def changed_defs(fn: object, rnd: int) -> frozenset[tuple[str, str]]:
+    """The (module_rel, def_name) entries of fn's closure whose source
+    differs from round ``rnd``'s tree: WHAT changed, so the rotation can
+    tell one shared helper's edit (the same set for every dependent) from
+    distinct rewrites. The whole closure when fn is missing there; empty
+    when nothing resolves (no git, no round commit, fn outside the repo)."""
+    loc = _locate(fn)
+    commit = _round_commit(rnd)
+    if loc is None or commit is None:
+        return frozenset()
+    now = _closure(_tree_for(None), *loc)
+    if now is None:
+        return frozenset()
+    old = _closure(_tree_for(commit), *loc) or {}
+    return frozenset(k for k, src in now.items() if old.get(k) != src)
+

@@ -35,6 +35,7 @@ from bloom_filters_count_min_sketch_spark_streaming_spark.plans.registry import 
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
 from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
     _ephemeral_ckpt,
+    one_wave_partitions,
 )
 
 # ---------------------------------------------------------------------------
@@ -680,10 +681,10 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("v").cast("long")).cast("long").alias("v_sum"),
     )
     name = f"synth_stream_{uuid.uuid4().hex[:8]}"
-    # run_available_now's shuffle sizing, inlined: 32 partitions per
-    # 100-row micro-batch is pure state-commit overhead x10 batches
+    # run_available_now's shuffle sizing (one wave of tasks): 32 partitions
+    # per 100-row micro-batch is pure state-commit overhead x10 batches
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", str(one_wave_partitions(spark)))
     q = (
         agg.writeStream.format("memory")
         .queryName(name)

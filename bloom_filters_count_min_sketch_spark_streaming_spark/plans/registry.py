@@ -258,7 +258,10 @@ def _apply_priority_order() -> None:
     Unverified queries are bucketed by change recency (implfp: changed this
     round > changed last recorded round > older drift) so a rewrite enters
     the very next driver hash window instead of waiting out the staleness
-    cycle; within a bucket never-checked queries sort before touched ones.
+    cycle; within a bucket never-checked queries sort before touched ones,
+    and touched ones take turns by distinct change (implfp.changed_defs):
+    each change's stalest dependent first, then each change's second, so a
+    shared helper's edit spreads over rounds instead of filling the window.
     A floor of _MIN_FRESH never-checked entries is enforced so the fresh
     tail keeps draining regardless of how many rewrites a round makes.
 
@@ -278,19 +281,41 @@ def _apply_priority_order() -> None:
         change = implfp.rotation_change_info(
             {n: QUERIES[n] for n in candidates}, checked
         )
+        rewritten = sorted(
+            (n for n, (_, t) in change.items() if t and n in checked),
+            key=lambda n: (change[n][0], checked[n], reg_index[n]),
+        )
+        # Round-robin over distinct changes: the k-th stalest dependent of
+        # a change gets rank k, so one shared helper's edit (every streaming
+        # query after a runner change) cannot crowd a separate rewrite out
+        # of the window. A query with no identifiable change set is its own.
+        seen: dict[tuple, int] = {}
+        rank: dict[str, int] = {}
+        for n in rewritten:
+            key = (change[n][0], implfp.changed_defs(QUERIES[n], checked[n]) or n)
+            rank[n] = seen.get(key, 0)
+            seen[key] = rank[n] + 1
     except Exception:  # pragma: no cover — git/parse failure must never
         # break query registration; degrade to pure staleness rotation.
-        change = {}
+        change, rank = {}, {}
 
     def sort_key(n: str) -> tuple:
         bucket, touched = change.get(n, (implfp.CHANGED_OLDER, False))
         never = n not in checked
         if never or touched:
             # unverified-since-change: recent changes first; never-checked
-            # ahead of touched within a bucket; touched tie-break on
-            # staleness so the longest-unverified rewrite re-enters first.
-            return (0, bucket, 1 if not never else 0, checked.get(n, 0), reg_index[n])
-        return (1, 0, 0, checked[n], reg_index[n])
+            # ahead of touched within a bucket; touched ranked round-robin
+            # over distinct changes, then on staleness so the longest-
+            # unverified rewrite re-enters first.
+            return (
+                0,
+                bucket,
+                1 if not never else 0,
+                rank.get(n, 0),
+                checked.get(n, 0),
+                reg_index[n],
+            )
+        return (1, 0, 0, 0, checked[n], reg_index[n])
 
     candidates.sort(key=sort_key)
     head_fill = candidates[:fill]

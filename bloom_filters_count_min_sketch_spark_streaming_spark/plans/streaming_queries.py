@@ -26,6 +26,7 @@ from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner impor
     _ephemeral_ckpt,
     events_stream_source,
     ntile_stream_source,
+    one_wave_partitions,
     run_available_now,
     run_foreach_batch,
     table_stream_source,
@@ -1540,7 +1541,7 @@ def stream_rate_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session's 32 partitions every 1000-row micro-batch pays 32 state
     # commits and the poll loop's own jobs compound it
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", str(one_wave_partitions(spark)))
     q = None
     try:
         # start() inside the try: if it throws (checkpoint dir failure,
@@ -4262,10 +4263,10 @@ def stream_corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles a few-thousand-row batch, and at the session's 32
     # partitions the cascade's ~6 jobs per batch pay 32 task/commit
     # overheads each (the same floor the runner scopes for stateful
-    # queries); results are partition-count invariant. At real scale
-    # this is sized to batch volume / executor count, not a constant.
+    # queries, one wave of tasks); results are partition-count invariant.
+    # At real scale this is sized to batch volume / executor count.
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", str(one_wave_partitions(spark)))
     try:
         run_foreach_batch(src, _stage_batch)
         _qmark("stream_total")

@@ -72,35 +72,59 @@ def tmp_snapshot_dir(prefix: str = "bfcms_snap_", dir: str | None = None) -> str
 
 
 # Streaming checkpoint dirs (streaming/runner._ephemeral_ckpt) are swept by
-# GLOB + mtime guard instead of by registration: registering from inside
-# runner.py would put the cleanup call into the implementation-fingerprint
-# closure of every streaming query (plans/implfp.py) and flood the driver's
-# r14 hash window with 48 re-checks for a harness-only change. The guard
-# (only dirs this process could have created: mtime >= process start)
-# keeps a concurrently running session's live checkpoints safe; harnesses
-# here run queries serially.
-_PROCESS_T0 = __import__("time").time()
+# GLOB over this process's own prefix: the pid in the name is the owner, so
+# a concurrently running session's live checkpoints (or a test's
+# hand-made bfcms_ckpt_md_* dir) never match, whatever their mtime.
 _CKPT_GLOB_ROOTS = ["/dev/shm", tempfile.gettempdir()]
 
+# Query names of run_available_now memory sinks. Each sink stays a temp
+# view, holding its rows on the driver, until release drops it.
+_SINK_VIEWS: list[str] = []
 
-def release_tmp_snapshots() -> None:
-    """Delete every registered snapshot dir (call AFTER the query's action:
-    the lazily returned plan references the snapshot until materialized),
-    plus this process's ephemeral streaming-checkpoint dirs."""
+
+def ckpt_prefix() -> str:
+    """mkdtemp prefix of this process's streaming checkpoint dirs."""
+    return f"bfcms_ckpt_{os.getpid()}_"
+
+
+def register_sink_view(name: str) -> None:
+    """Mark a memory-sink temp view for release_tmp_snapshots to drop."""
+    _SINK_VIEWS.append(name)
+
+
+def _drop_sink_views() -> None:
+    """Drop every registered sink view through the active session; a no-op
+    without one (never started, or stopped: the views died with it). A
+    view the caller already dropped is skipped by dropTempView."""
+    spark = SparkSession.getActiveSession()
+    while _SINK_VIEWS:
+        name = _SINK_VIEWS.pop()
+        if spark is not None:
+            spark.catalog.dropTempView(name)
+
+
+def _release_dirs() -> None:
     while _TMP_SNAPSHOT_DIRS:
         shutil.rmtree(_TMP_SNAPSHOT_DIRS.pop(), ignore_errors=True)
     import glob
 
     for root in _CKPT_GLOB_ROOTS:
-        for d in glob.glob(os.path.join(root, "bfcms_ckpt_*")):
-            try:
-                if os.stat(d).st_mtime >= _PROCESS_T0 - 1.0:
-                    shutil.rmtree(d, ignore_errors=True)
-            except OSError:
-                pass
+        for d in glob.glob(os.path.join(root, ckpt_prefix() + "*")):
+            shutil.rmtree(d, ignore_errors=True)
 
 
-atexit.register(release_tmp_snapshots)
+def release_tmp_snapshots() -> None:
+    """Delete every registered snapshot dir (call AFTER the query's action:
+    the lazily returned plan references the snapshot until materialized),
+    this process's ephemeral streaming-checkpoint dirs, and the registered
+    memory-sink views."""
+    _drop_sink_views()
+    _release_dirs()
+
+
+# The interpreter-exit sweep touches files only: by then the JVM may be
+# gone, and its temp views with it.
+atexit.register(_release_dirs)
 
 
 @contextmanager

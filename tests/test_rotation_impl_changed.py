@@ -160,6 +160,67 @@ def test_touched_queries_enter_prefix(monkeypatch) -> None:
         registry._apply_priority_order()
 
 
+def test_changed_defs_names_the_edited_defs(monkeypatch) -> None:
+    """changed_defs reports WHICH closure defs differ from a round's tree:
+    the edited helper only, not the unrelated function or the caller."""
+    from types import SimpleNamespace
+
+    edited = OPS_SRC.replace("x + CONST", "x * CONST").replace("return 42", "return 43")
+    trees = {
+        None: _FakeTree({PLANS: PLANS_SRC, OPS: edited}),
+        "c13": _FakeTree({PLANS: PLANS_SRC, OPS: OPS_SRC}),
+    }
+    monkeypatch.setattr(implfp, "_round_commit", {13: "c13"}.get)
+    monkeypatch.setattr(implfp, "_tree_for", trees.__getitem__)
+    path = os.path.join(implfp._repo_root(), PLANS)
+
+    def fn(name: str) -> SimpleNamespace:
+        return SimpleNamespace(__code__=SimpleNamespace(co_filename=path), __name__=name)
+
+    assert implfp.changed_defs(fn("my_query"), 13) == {(OPS, "helper")}
+    assert implfp.changed_defs(fn("other_query"), 13) == frozenset()
+    assert implfp.changed_defs(fn("my_query"), 12) == frozenset()  # no commit
+
+
+def test_shared_change_does_not_crowd_out_rewrite(monkeypatch) -> None:
+    """One helper edit shared by more checked queries than the prefix holds
+    must not push a separate rewrite out of the next window: distinct
+    changes take turns, each entering with its stalest dependent."""
+    registry.load_all_query_modules()
+    checked = registry.driver_checked_rounds()
+    never = [n for n in registry.QUERIES if n in registry.ORACLES and n not in checked]
+    victim = next(
+        n
+        for n in registry.QUERIES
+        if n in registry.ORACLES
+        and n in checked
+        and n not in registry.active_pins()
+        and checked[n] == max(checked.values())
+    )
+    shared = frozenset({(f"{PKG}/streaming/runner.py", "run_available_now")})
+
+    def flood_info(query_fns, chk):
+        return {
+            n: ((implfp.CHANGED_THIS_ROUND, True) if n in chk else (implfp.CHANGED_OLDER, False))
+            for n in query_fns
+        }
+
+    def fake_defs(fn, rnd):
+        return frozenset({(PLANS, victim)}) if fn is registry.QUERIES[victim] else shared
+
+    monkeypatch.setattr(implfp, "rotation_change_info", flood_info)
+    monkeypatch.setattr(implfp, "changed_defs", fake_defs)
+    registry._apply_priority_order()
+    try:
+        prefix = list(registry.QUERIES)[:50]
+        assert victim in prefix
+        fresh = [n for n in prefix if n not in checked]
+        assert len(fresh) >= min(registry._MIN_FRESH, len(never))
+    finally:
+        monkeypatch.undo()
+        registry._apply_priority_order()
+
+
 def test_freshness_floor_under_rewrite_flood(monkeypatch) -> None:
     """Even if EVERY checked query reads as rewritten-this-round, the
     prefix keeps >= _MIN_FRESH never-checked entries so the fresh tail
@@ -223,3 +284,44 @@ def test_rotation_info_degrades_without_git(monkeypatch) -> None:
     monkeypatch.undo()
     implfp._tree_for.cache_clear()
     registry._apply_priority_order()
+
+
+def test_rotation_info_falls_back_per_query_when_latest_round_unresolvable(
+    monkeypatch,
+) -> None:
+    """While the newest round's correctness record is uncommitted its commit
+    cannot be resolved; each query must still be compared against the tree
+    of the round that last checked IT, so a rewrite since then is caught."""
+    from types import SimpleNamespace
+
+    current = _FakeTree({PLANS: PLANS_SRC, OPS: OPS_SRC})
+    trees = {
+        None: current,
+        "c12": current,
+        "c13": _FakeTree({PLANS: PLANS_SRC, OPS: OPS_SRC.replace("x + CONST", "x * CONST")}),
+    }
+    commits = {12: "c12", 13: "c13", 14: None}
+    monkeypatch.setattr(implfp, "_round_commit", commits.get)
+    monkeypatch.setattr(implfp, "_tree_for", trees.__getitem__)
+
+    def fn(name: str) -> SimpleNamespace:
+        path = os.path.join(implfp._repo_root(), PLANS)
+        return SimpleNamespace(__code__=SimpleNamespace(co_filename=path), __name__=name)
+
+    info = implfp.rotation_change_info(
+        {
+            "rewritten": fn("my_query"),
+            "stable": fn("other_query"),
+            "same_at_r12": fn("my_query"),
+            "checked_latest": fn("my_query"),
+            "never": fn("my_query"),
+        },
+        {"rewritten": 13, "stable": 13, "same_at_r12": 12, "checked_latest": 14},
+    )
+    assert info == {
+        "rewritten": (implfp.CHANGED_OLDER, True),
+        "stable": (implfp.CHANGED_OLDER, False),
+        "same_at_r12": (implfp.CHANGED_OLDER, False),
+        "checked_latest": (implfp.CHANGED_OLDER, False),
+        "never": (implfp.CHANGED_OLDER, False),
+    }

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from bloom_filters_count_min_sketch_spark_streaming_spark.sources.io import load
 from bloom_filters_count_min_sketch_spark_streaming_spark.streaming.runner import (
     events_stream_source,
+    one_wave_partitions,
     run_available_now,
 )
 
@@ -261,12 +262,10 @@ def test_chained_streaming_window_aggregations(spark, sf_dir, tmp_path):
     assert got == exact
 
 
-def test_state_metadata_source_lists_operators(spark, sf_dir):
+def test_state_metadata_source_lists_operators(spark, sf_dir, tmp_path):
     """The state-metadata source enumerates stateful operators, state store
     names, partition counts, and batch id ranges from a checkpoint — the
     ops-side complement of the statestore reader."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
     src = events_stream_source(spark, sf_dir)
@@ -275,7 +274,8 @@ def test_state_metadata_source_lists_operators(spark, sf_dir):
         .groupBy(F.window("ts", "6 hours"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    ckpt = tempfile.mkdtemp(prefix="bfcms_ckpt_md_")
+    # under tmp_path: the checkpoint sweep takes only runner-made dirs
+    ckpt = str(tmp_path / "ckpt")
     q = (
         agg.writeStream.format("memory")
         .queryName("md_probe")
@@ -532,3 +532,137 @@ def test_stream_cms_counters_equal_batch_build(spark, sf_dir):
     )
     assert np.array_equal(fused_cust.table, batch_cust.table)
     assert fused_cust.total == batch_cust.total
+
+
+def _state_shuffle_partitions(spark, sf_dir, **kwargs) -> list[int]:
+    """numShufflePartitions of the state operator in every progress event
+    of a running_counts run through run_available_now."""
+    import json
+    import uuid
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark.streaming import stateful
+
+    name = f"sp_probe_{uuid.uuid4().hex[:8]}"
+    seen: list[int] = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = json.loads(event.progress.json)
+            if p.get("name") == name and p.get("stateOperators"):
+                seen.append(p["stateOperators"][0]["numShufflePartitions"])
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        src = events_stream_source(spark, sf_dir)
+        run_available_now(
+            stateful.running_counts(src, "user_id"), "append", query_name=name, **kwargs
+        ).count()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert seen, "no progress event with a state operator"
+    return seen
+
+
+def test_state_partitions_default_is_one_wave(spark, sf_dir):
+    """By default the state store gets one wave of tasks: as many
+    partitions as the session has task slots, capped at 8."""
+    want = min(8, spark.sparkContext.defaultParallelism)
+    assert set(_state_shuffle_partitions(spark, sf_dir)) == {want}
+
+
+def test_one_wave_partitions_follows_task_slots():
+    """The sizing rule itself, whatever the test session's slot count: one
+    partition per task slot, capped at 8."""
+    from types import SimpleNamespace
+
+    def session_with(slots: int) -> SimpleNamespace:
+        return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=slots))
+
+    assert [one_wave_partitions(session_with(n)) for n in (1, 4, 8, 32)] == [1, 4, 8, 8]
+
+
+def test_state_partitions_explicit_value_wins(spark, sf_dir):
+    assert set(_state_shuffle_partitions(spark, sf_dir, state_partitions=1)) == {1}
+
+
+def test_run_available_now_restores_shuffle_partitions(spark, sf_dir):
+    """The state-partition conf is scoped to the run, also when the
+    streaming query fails."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        src = events_stream_source(spark, sf_dir)
+        run_available_now(src.groupBy("event_type").count(), "complete").count()
+        assert spark.conf.get(key) == "7"
+        failing = src.select(F.raise_error(F.lit("boom")).alias("x"))
+        with pytest.raises(StreamingQueryException):
+            run_available_now(failing, "append", state_partitions=3)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_checkpoint_sweep_only_takes_own_pid(monkeypatch, tmp_path):
+    """release_tmp_snapshots deletes this process's streaming checkpoints
+    and no one else's, however recent: a concurrent run's (other pid) and
+    a hand-made test checkpoint survive."""
+    import os
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark import session
+
+    monkeypatch.setattr(session, "_CKPT_GLOB_ROOTS", [str(tmp_path)])
+    mine = tempfile.mkdtemp(prefix=session.ckpt_prefix(), dir=tmp_path)
+    other_pid = os.getpid() + 1
+    others = [tmp_path / "bfcms_ckpt_md_x", tmp_path / f"bfcms_ckpt_{other_pid}_x"]
+    for d in others:
+        d.mkdir()
+    session.release_tmp_snapshots()
+    assert not os.path.exists(mine)
+    assert all(d.is_dir() for d in others)
+
+
+def test_release_drops_memory_sink_views(spark, sf_dir):
+    """A run_available_now sink stays a temp view until release drops it;
+    a second release (or one after the caller dropped the view) is fine."""
+    from bloom_filters_count_min_sketch_spark_streaming_spark.session import (
+        release_tmp_snapshots,
+    )
+
+    src = events_stream_source(spark, sf_dir)
+    run_available_now(src.groupBy("event_type").count(), "complete", query_name="sink_probe")
+    run_available_now(src.groupBy("user_id").count(), "complete", query_name="sink_dropped")
+    spark.catalog.dropTempView("sink_dropped")
+    assert spark.catalog.tableExists("sink_probe")
+    release_tmp_snapshots()
+    assert not spark.catalog.tableExists("sink_probe")
+    release_tmp_snapshots()
+
+
+def test_release_without_active_session_forgets_views(monkeypatch):
+    """With no active session (never started, or stopped) there is nothing
+    to drop through; the registered names are forgotten without a JVM call."""
+    from pyspark.sql import SparkSession
+
+    from bloom_filters_count_min_sketch_spark_streaming_spark import session
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: None))
+    session.register_sink_view("never_created")
+    session.release_tmp_snapshots()
+    assert session._SINK_VIEWS == []
